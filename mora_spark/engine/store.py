@@ -61,6 +61,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -111,6 +112,31 @@ def _ts_micros(x) -> int:
         epoch = dt.datetime(1970, 1, 1)
     d = x - epoch
     return (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
+
+
+def _utc(us: int) -> dt.datetime:
+    """Naive-UTC datetime of epoch micros (the inverse of _ts_micros),
+    independent of the host timezone."""
+    return dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us)
+
+
+def _ts_lit(us: int):
+    """A timestamp literal from epoch micros. ``F.lit(naive datetime)``
+    would read the datetime in the HOST's timezone."""
+    return F.timestamp_micros(F.lit(us).cast("long"))
+
+
+class _BatchKeys(NamedTuple):
+    """Everything the merge and rollup planners need from one candle
+    batch, from ONE aggregation over it (:meth:`CandleStore._batch_keys`).
+    Timestamps are epoch micros: collected datetimes would come back in
+    the host's timezone."""
+
+    rows: int
+    #: touched partition tuple -> (min ts, max ts) of its batch rows
+    spans: dict[tuple[str, ...], tuple[int, int]]
+    #: rollup length -> {(market, code, bucket start, year of bucket)}
+    buckets: dict[int, set[tuple[str, str, int, int]]]
 
 
 def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int] | None:
@@ -562,6 +588,58 @@ class CandleStore:
             raise ValueError(f"candle batch missing columns: {missing}")
         return self._with_year(df.select(*CANDLE_COLUMNS))
 
+    def _batch_keys(
+        self,
+        batch: DataFrame,
+        rollup_lengths: tuple[int, ...] = (),
+        anchor_s: int = 0,
+    ) -> _BatchKeys:
+        """ONE aggregation over ``batch`` (one job, one driver round
+        trip) returns its row count, its touched partitions with each
+        one's ts span, and, per rollup length, its touched-bucket set —
+        bounded by the batch's distinct (partition, bucket) keys, not
+        its rows. The merge read-back file-prunes on the spans; the
+        rollup's broadcast semi-join and its own merge plan from the
+        bucket sets. Buckets use the same grid expression resample
+        writes on (shared bucket_expr): a divergent grid would make the
+        semi-join silently drop buckets."""
+        from mora_spark.operators.resample import bucket_expr
+
+        ts = F.unix_micros("ts")
+        aggs = [
+            F.count(F.lit(1)).alias("__n"),
+            F.min(ts).alias("__lo"),
+            F.max(ts).alias("__hi"),
+        ]
+        for i, length in enumerate(rollup_lengths):
+            bucket = bucket_expr(length, anchor_s)
+            aggs.append(
+                F.collect_set(
+                    F.struct(
+                        F.unix_micros(bucket).alias("us"),
+                        F.year(bucket).alias("y"),
+                    )
+                ).alias(f"__b{i}")
+            )
+        rows = (
+            self._normalize(batch)
+            .groupBy(*CANDLE_PARTITIONS)
+            .agg(*aggs)
+            .collect()
+        )
+        spans: dict[tuple[str, ...], tuple[int, int]] = {}
+        buckets: dict[int, set] = {length: set() for length in rollup_lengths}
+        for r in rows:
+            spans[tuple(str(r[c]) for c in CANDLE_PARTITIONS)] = (
+                r["__lo"], r["__hi"]
+            )
+            for i, length in enumerate(rollup_lengths):
+                buckets[length].update(
+                    (r["market"], r["code"], b["us"], b["y"])
+                    for b in r[f"__b{i}"]
+                )
+        return _BatchKeys(sum(r["__n"] for r in rows), spans, buckets)
+
     @staticmethod
     def _tuple_of(entry: dict) -> tuple[str, ...]:
         """Partition tuple of a file entry OR a manifest pointer (both
@@ -714,11 +792,35 @@ class CandleStore:
         read nor rewritten. Concurrent writers serialize through the
         manifest CAS: the loser recomputes against the winner's
         snapshot, so no committed row is ever lost.
+
+        ``touched_partitions``/``touched_spans`` let a caller that
+        already knows the batch's partitions (and each one's ts span in
+        epoch micros) skip the collect that would find them; every
+        ``touched_spans`` key must be a touched partition, because a
+        span is what lets the merge carry a file without reading it.
+
+        An empty batch publishes no version. It runs no staging write
+        either, except in append mode without ``touched_partitions``:
+        there the staging write is the first action over the batch, and
+        finding it empty first would cost every append a job.
         """
+        if mode not in ("merge", "append"):
+            raise ValueError(f"unknown write mode: {mode}")
+        if touched_spans is not None and (
+            touched_partitions is None
+            or not set(touched_spans) <= set(touched_partitions)
+        ):
+            raise ValueError(
+                "touched_spans keys must be a subset of touched_partitions"
+            )
+        if touched_partitions is not None and not touched_partitions:
+            return
         batch = self._normalize(df)
         if mode == "append":
             txn = uuid.uuid4().hex
             new = self._stage_and_publish(batch, txn)
+            if not new:
+                return  # an empty batch: nothing staged, nothing to commit
             by_part = self._group_by_partition(new)
             for _ in range(MAX_COMMIT_RETRIES):
                 # Data is snapshot-independent: reuse the staged files,
@@ -753,36 +855,22 @@ class CandleStore:
                 if self._log.try_commit(version + 1, out, txn):
                     return
             raise RuntimeError("append: commit contention, retries exhausted")
-        if mode != "merge":
-            raise ValueError(f"unknown write mode: {mode}")
 
         # Partition tuple count is bounded (series x years), so the
         # collect and the driver-side manifest pruning stay small even
         # for huge row counts. A caller that already KNOWS the touched
-        # set (derive_rollup: the bucket grid it collected to build the
-        # semi-join) passes it in and skips this evaluation — for a
-        # derived batch the distinct here would replay the whole
-        # read-back + resample chain just to rediscover the same keys.
-        # ONE aggregation returns the partition set AND its per-
-        # partition ts span (partial aggregation makes the min/max free
-        # relative to the old distinct), so the read-back below can
-        # skip files whose stats range cannot collide with the batch.
+        # set (the streaming sink's one pass over its batch, the
+        # rollup's bucket grid) passes it in and skips this evaluation
+        # — for a derived batch it would replay the whole read-back +
+        # resample chain just to rediscover the same keys. The same
+        # aggregation returns each partition's ts span, so the
+        # read-back below can skip files whose stats range cannot
+        # collide with the batch.
         if touched_partitions is None:
-            rows = (
-                batch.groupBy(*CANDLE_PARTITIONS)
-                .agg(F.min("ts").alias("__lo"), F.max("ts").alias("__hi"))
-                .collect()
-            )
-            touched = {
-                tuple(str(r[c]) for c in CANDLE_PARTITIONS) for r in rows
-            }
-            touched_spans = {
-                tuple(str(r[c]) for c in CANDLE_PARTITIONS): (
-                    _ts_micros(r["__lo"]),
-                    _ts_micros(r["__hi"]),
-                )
-                for r in rows
-            }
+            touched_spans = self._batch_keys(batch).spans
+            touched = set(touched_spans)
+            if not touched:
+                return
         else:
             touched = touched_partitions
         spans = touched_spans or {}
@@ -1099,103 +1187,85 @@ class CandleStore:
         Recomputing a bucket from source is idempotent, so overlapping
         batches and upserts converge to the same bars as a full
         ``resample`` of the final source series (the invariant
-        tests/test_store.py asserts).
+        tests/test_store.py asserts). One collect over the batch
+        (:meth:`_batch_keys`) plans the read-back window, the bucket
+        set and the derived merge's partitions and spans.
         """
-        from mora_spark.operators.resample import bucket_expr, resample
-
         if target_length_s % source_length_s:
             raise ValueError(
                 "target_length_s must be a multiple of source_length_s"
             )
-        b = self._normalize(batch)
-        # The touched-bucket grid MUST be the identical expression
-        # resample writes on (shared bucket_expr) — a divergent grid
-        # would make the semi-join silently drop buckets.
-        bucket = bucket_expr(target_length_s, anchor_s)
-        # ONE pass over the batch collects the span, the granularity
-        # bounds AND the touched-bucket set (bounded by the batch's
-        # distinct (series, bucket) keys — the same cardinality the
-        # broadcast semi-join below carries either way); computing the
-        # bucket set as a separate distinct would re-evaluate the batch
-        # in its own broadcast-build job.
-        span = b.agg(
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-            F.min("candle_length").alias("len_lo"),
-            F.max("candle_length").alias("len_hi"),
-            F.collect_set(
-                F.struct("market", "code", bucket.alias("__bucket"))
-            ).alias("buckets"),
-        ).collect()[0]
-        if span["lo"] is None:
+        keys = self._batch_keys(batch, (target_length_s,), anchor_s)
+        self._rollup(keys, target_length_s, source_length_s, anchor_s)
+
+    def _rollup(
+        self,
+        keys: _BatchKeys,
+        target_length_s: int,
+        source_length_s: int = 60,
+        anchor_s: int = 0,
+    ) -> None:
+        """The body of :meth:`derive_rollup`, planned from a batch's
+        :meth:`_batch_keys` alone: the streaming sink computes those
+        once per micro-batch for its merge and every rollup length."""
+        import pandas as pd
+
+        from mora_spark.operators.resample import bucket_expr, resample
+
+        if not keys.spans:
             return
-        touched = tiny_df(
-            self.spark,
-            [
-                (r["market"], r["code"], r["__bucket"])
-                for r in span["buckets"]
-            ],
-            "market string, code string, __bucket timestamp",
-        )
-        if (
-            span["len_lo"] != source_length_s
-            or span["len_hi"] != source_length_s
-        ):
+        lengths = sorted({int(t[1]) for t in keys.spans})
+        if lengths != [source_length_s]:
             # A wrong-granularity batch would compute a touched set
             # whose buckets the source read-back can't fill — the
             # derived series would go silently stale.
             raise ValueError(
                 f"derive_rollup: batch candle_length"
-                f" {span['len_lo']}..{span['len_hi']} != source series"
+                f" {lengths[0]}..{lengths[-1]} != source series"
                 f" length {source_length_s}"
             )
-        lo = span["lo"] - dt.timedelta(seconds=target_length_s)
-        hi = span["hi"] + dt.timedelta(seconds=target_length_s)
+        step = target_length_s * 1_000_000
+        lo = min(s[0] for s in keys.spans.values()) - step
+        hi = max(s[1] for s in keys.spans.values()) + step
+        bucket = bucket_expr(target_length_s, anchor_s)
         src = self.read(
-            candle_length=source_length_s, start=lo, end=hi
+            candle_length=source_length_s, start=_utc(lo), end=_utc(hi)
         ).withColumn("__bucket", bucket)
+        buckets = sorted(keys.buckets[target_length_s])
+        # The touched-bucket relation is built driver-side from integer
+        # micros: a pandas frame plans as a LocalTableScan, so its
+        # broadcast needs no Python-worker job.
+        touched = self.spark.createDataFrame(
+            pd.DataFrame(
+                [(m, c, us) for m, c, us, _ in buckets],
+                columns=["market", "code", "__us"],
+            )
+        ).select(
+            "market", "code", F.timestamp_micros("__us").alias("__bucket")
+        )
         affected = src.join(
             F.broadcast(touched), ["market", "code", "__bucket"]
         ).drop("__bucket")
         # The rollup batch's partition set is fully determined by the
-        # touched-bucket grid collected above: every touched (market,
-        # code, bucket) has >= 1 source row in the read-back span (its
-        # own just-written batch rows at minimum), so resample emits
-        # rows for exactly these keys -> partitions (market,
-        # target_length, code, year(bucket)). Deriving them from the
-        # TINY bucket table (one single-slice job; F.year keeps the
-        # session-tz semantics of _normalize's year column) lets
-        # write() skip its distinct-collect, which would re-evaluate
-        # the whole read-back + resample chain once more per
-        # micro-batch just to rediscover the same keys. The same
-        # aggregation yields each partition's bucket span — resampled
-        # rows carry ts = bucket start, so [min, max] bucket per
-        # partition is exactly the span write() needs to file-prune
-        # ITS read-back of the derived series.
-        grid = (
-            touched.groupBy(
-                "market", "code", F.year("__bucket").alias("y")
-            )
-            .agg(
-                F.min("__bucket").alias("__lo"),
-                F.max("__bucket").alias("__hi"),
-            )
-            .collect()
-        )
-        parts = {
-            (r["market"], str(target_length_s), r["code"], str(r["y"]))
-            for r in grid
-        }
-        spans = {
-            (r["market"], str(target_length_s), r["code"], str(r["y"])): (
-                _ts_micros(r["__lo"]),
-                _ts_micros(r["__hi"]),
-            )
-            for r in grid
-        }
+        # touched-bucket set: every touched (market, code, bucket) has
+        # >= 1 source row in the read-back span (its own just-written
+        # batch rows at minimum), so resample emits rows for exactly
+        # these keys -> partitions (market, target_length, code,
+        # year(bucket)), the year computed by Spark with the session-tz
+        # semantics of _normalize's year column. Handing them to
+        # write() skips its collect, which would re-evaluate the whole
+        # read-back + resample chain once more just to rediscover the
+        # same keys. Resampled rows carry ts = bucket start, so each
+        # partition's [min, max] bucket is exactly the span write()
+        # needs to file-prune ITS read-back of the derived series.
+        spans: dict[tuple[str, ...], tuple[int, int]] = {}
+        for m, c, us, y in buckets:
+            t = (m, str(target_length_s), c, str(y))
+            s_lo, s_hi = spans.get(t, (us, us))
+            spans[t] = (min(s_lo, us), max(s_hi, us))
         self.write(
             resample(affected, target_length_s, anchor_s=anchor_s),
-            touched_partitions=parts,
+            touched_partitions=set(spans),
             touched_spans=spans,
         )
 
@@ -1352,6 +1422,11 @@ class CandleStore:
         :meth:`vacuum` reclaims files the NEWEST manifest no longer
         references — vacuum bounds the time-travel horizon, as in Delta.
         """
+        # Naive start/end are UTC (the session contract), for the
+        # manifest pruning and the Spark filter literals alike.
+        lo_req = _ts_micros(start) if start is not None else None
+        hi_req = _ts_micros(end) if end is not None else None
+
         def keep(e: dict) -> bool:
             p = e["partition"]
             if market is not None and p["market"] != market:
@@ -1362,17 +1437,9 @@ class CandleStore:
                 candle_length
             ):
                 return False
-            if (
-                start is not None
-                and hasattr(start, "year")
-                and int(p["year"]) < start.year
-            ):
+            if lo_req is not None and int(p["year"]) < _utc(lo_req).year:
                 return False
-            if (
-                end is not None
-                and hasattr(end, "year")
-                and int(p["year"]) > end.year
-            ):
+            if hi_req is not None and int(p["year"]) > _utc(hi_req).year:
                 return False
             return True
 
@@ -1399,9 +1466,6 @@ class CandleStore:
                     f"(earliest retained commit is newer, or the era "
                     f"was expired)"
                 )
-
-        lo_req = _ts_micros(start) if start is not None else None
-        hi_req = _ts_micros(end) if end is not None else None
 
         def keep_file(e: dict) -> bool:
             # Delta-style file skipping on the manifest's ts stats:
@@ -1450,14 +1514,14 @@ class CandleStore:
             df = df.where(F.col("code") == code)
         if candle_length is not None:
             df = df.where(F.col("candle_length") == candle_length)
-        if start is not None:
+        if lo_req is not None:
             df = df.where(
-                (F.col("ts") >= F.lit(start))
-                & (F.col("year") >= F.year(F.lit(start)))
+                (F.col("ts") >= _ts_lit(lo_req))
+                & (F.col("year") >= F.year(_ts_lit(lo_req)))
             )
-        if end is not None:
+        if hi_req is not None:
             df = df.where(
-                (F.col("ts") < F.lit(end))
-                & (F.col("year") <= F.year(F.lit(end)))
+                (F.col("ts") < _ts_lit(hi_req))
+                & (F.col("year") <= F.year(_ts_lit(hi_req)))
             )
         return df.select(*CANDLE_COLUMNS)

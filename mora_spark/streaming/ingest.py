@@ -103,7 +103,9 @@ def ordered_chunked_source(
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int):
+def _state_partitions(
+    spark: SparkSession, n: int, no_data_batches: bool = True
+):
     """Run a bounded streaming job with ``n`` state-store partitions.
 
     Shuffle-partition count is baked into a NEW checkpoint as the state
@@ -112,14 +114,23 @@ def _state_partitions(spark: SparkSession, n: int):
     batch setting) removes per-batch task overhead. Production streams
     should size this to peak key cardinality before first start — it
     cannot change across restarts of the same checkpoint.
+
+    ``no_data_batches=False`` stops Spark from running a batch with no
+    new input just because the watermark advanced: state eviction then
+    waits for the next data batch, and an update-mode sink sees the
+    same rows, minus a call on an empty batch.
     """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    conf = {"spark.sql.shuffle.partitions": str(n)}
+    if not no_data_batches:
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def _read_stream(spark: SparkSession, src: str) -> DataFrame:
@@ -266,11 +277,13 @@ def stream_store_merge(
     at-least-once delivery) and late backfill converge to the same
     coarse series a from-scratch resample would produce.
 
-    ``batch_stats`` (when given) collects one dict per micro-batch —
-    ``{"batch_id", "rows", "merge_s", "rollup_s"}`` — the evidence
+    ``batch_stats`` (when given) collects one dict per data micro-batch
+    — ``{"batch_id", "rows", "merge_s", "rollup_s"}`` — the evidence
     surface for the continuous-aggregate scale contract: per-batch
     maintenance wall must track the BATCH, not the accumulated series
-    (``tools/scale_probe.py`` prints the curve).
+    (``tools/scale_probe.py`` prints the curve). The query runs no
+    no-data batches (see :func:`_state_partitions`), and an empty batch
+    is skipped.
     """
     import time as _time
     from mora_spark.engine import CandleStore
@@ -307,24 +320,32 @@ def stream_store_merge(
             "volume",
             "bit_fields",
         )
-        # The merge alone is TWO actions over the batch (the touched-
-        # partition collect inside CandleStore.write, then the staging
-        # write), and each rollup length adds its span/bucket collect —
-        # uncached, every one re-evaluates the micro-batch projection
-        # from the state store. Always persist for the batch's lifetime.
+        # Two passes over the batch: ONE aggregation (_batch_keys)
+        # yields the row count, the touched partitions with their ts
+        # spans and every rollup length's touched buckets; the merge's
+        # staging write is the other. Each rollup reads the store, not
+        # the batch. Persist so the staging write does not re-evaluate
+        # the projection from the state store.
         candles = candles.persist()
         try:
-            n = candles.count() if batch_stats is not None else None
             t0 = _time.time()
-            store.write(candles, mode="merge")
+            keys = store._batch_keys(candles, rollup_lengths)
+            if not keys.rows:
+                return
+            store.write(
+                candles,
+                mode="merge",
+                touched_partitions=set(keys.spans),
+                touched_spans=keys.spans,
+            )
             t1 = _time.time()
             for length in rollup_lengths:
-                store.derive_rollup(candles, length)
+                store._rollup(keys, length)
             if batch_stats is not None:
                 batch_stats.append(
                     {
                         "batch_id": batch_id,
-                        "rows": n,
+                        "rows": keys.rows,
                         "merge_s": round(t1 - t0, 3),
                         "rollup_s": round(_time.time() - t1, 3),
                     }
@@ -332,7 +353,7 @@ def stream_store_merge(
         finally:
             candles.unpersist()
 
-    with _state_partitions(spark, 8):
+    with _state_partitions(spark, 8, no_data_batches=False):
         q = (
             agg.writeStream.foreachBatch(sink)
             .outputMode("update")

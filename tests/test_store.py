@@ -939,3 +939,115 @@ def test_write_page_overwrites_on_append_retry(tmp_path):
         {"path": "data/a.parquet", "partition": {"market": "SYN"}},
         {"path": "data/b.parquet", "partition": {"market": "SYN"}},
     ]
+
+
+def test_empty_batch_commits_nothing(spark, store):
+    """An empty batch stages nothing and publishes no manifest version,
+    in either write mode."""
+    empty = mk(spark, [])
+    for mode in ("merge", "append"):
+        store.write(empty, mode=mode)
+        assert store._log.current()[0] == 0
+    store.write(mk(spark, [("BTC", dt.datetime(2021, 1, 1), 1.0)]))
+    v = store._log.current()[0]
+    for mode in ("merge", "append"):
+        store.write(empty, mode=mode)
+        assert store._log.current()[0] == v
+
+
+def test_touched_spans_must_name_touched_partitions(spark, store):
+    """A span lets the merge carry a file without reading it, so a span
+    for a partition the caller did not declare touched is refused."""
+    b = mk(spark, [("BTC", dt.datetime(2021, 1, 1), 1.0)])
+    btc = ("UPBIT", "60", "BTC", "2021")
+    eth = ("UPBIT", "60", "ETH", "2021")
+    with pytest.raises(ValueError, match="subset"):
+        store.write(b, touched_partitions={btc}, touched_spans={eth: (0, 1)})
+    with pytest.raises(ValueError, match="subset"):
+        store.write(b, touched_spans={btc: (0, 1)})
+    assert store._log.current()[0] == 0
+
+
+def test_store_results_independent_of_host_timezone(spark, store):
+    """Spans, rollup windows and read bounds are epoch micros end to end,
+    so a driver whose local timezone is not UTC merges, rolls up and
+    reads exactly as a UTC one. Collected timestamps come back in the
+    host's timezone: a span taken from them is shifted by the UTC
+    offset, which made the merge carry files that collide with the
+    batch (duplicate keys)."""
+    import os
+    import time
+
+    from mora_spark.operators.resample import resample
+
+    # 2024-12-31 23:50 UTC: the batches straddle a year boundary, and
+    # the second restates the first one's last five minutes.
+    base_us = 1_735_689_000 * 1_000_000
+    minute = 60 * 1_000_000
+
+    def batch(first, last, open_):
+        rows = [
+            ("UPBIT", code, 60, base_us + m * minute, open_ + m)
+            for code in ("BTC", "ETH")
+            for m in range(first, last)
+        ]
+        return spark.createDataFrame(
+            rows, "market string, code string, candle_length int,"
+            " us long, open double"
+        ).select(
+            "market", "code", "candle_length",
+            F.timestamp_micros("us").alias("ts"),
+            "open",
+            (F.col("open") + 1.0).alias("high"),
+            (F.col("open") - 1.0).alias("low"),
+            (F.col("open") + 0.5).alias("close"),
+            F.lit(10.0).alias("volume"),
+            F.lit(0).cast("long").alias("bit_fields"),
+        )
+
+    def bars(df):
+        return sorted(
+            (r["code"], r["us"], r["open"], r["close"], r["volume"])
+            for r in df.select(
+                "code", F.unix_micros("ts").alias("us"),
+                "open", "close", "volume",
+            ).collect()
+        )
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for b in (batch(0, 20, 100.0), batch(15, 35, 200.0)):
+            store.write(b)
+            store.derive_rollup(b, 300)
+        for length in (60, 300):
+            dup = (
+                store.read(candle_length=length)
+                .groupBy("market", "code", "candle_length", "ts")
+                .count()
+                .where("count > 1")
+                .count()
+            )
+            assert dup == 0, f"{dup} duplicate keys at {length}s"
+        src = store.read(candle_length=60)
+        assert src.count() == 2 * 35
+        assert bars(store.read(candle_length=300)) == bars(resample(src, 300))
+        # Naive bounds are UTC: minutes 16 and 17 of each code.
+        start = dt.datetime(2024, 12, 31, 23, 50) + dt.timedelta(minutes=16)
+        got = store.read(
+            candle_length=60,
+            start=start,
+            end=start + dt.timedelta(minutes=2),
+        )
+        assert bars(got) == [
+            (c, base_us + m * minute, 200.0 + m, 200.5 + m, 10.0)
+            for c in ("BTC", "ETH")
+            for m in (16, 17)
+        ]
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()

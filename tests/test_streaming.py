@@ -535,3 +535,72 @@ def test_chunked_replay_source_one_pass_layout(spark, tmp_path):
             4,
             "doc_id % 4",
         )
+
+
+class _JobCursor:
+    """Jobs run since the last ``take``: a cursor over the sequential
+    job ids in ``statusTracker`` (a streaming query runs its jobs under
+    its own job group, so a group lookup would miss them)."""
+
+    def __init__(self, spark):
+        sc = spark.sparkContext
+        self.st = sc.statusTracker()
+        self.bus = sc._jsc.sc().listenerBus()
+        sc.setJobGroup("test-job-cursor", "job id cursor")
+        try:
+            sc.parallelize([0], 1).count()
+            self.cursor = max(self.st.getJobIdsForGroup("test-job-cursor")) + 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def take(self) -> int:
+        self.bus.waitUntilEmpty()  # the status store fills asynchronously
+        n, j, misses = 0, self.cursor, 0
+        while misses < 8:  # ids of jobs that never started leave gaps
+            info = self.st.getJobInfo(j)
+            j += 1
+            if info is None:
+                misses += 1
+                continue
+            misses = 0
+            self.cursor = j
+            n += 1
+        return n
+
+
+def test_stream_store_merge_schedule_and_stats(spark, source_files, tmp_path):
+    """The merge sink's per-batch schedule: only data batches reach it
+    (no watermark-only no-data batch, no empty-batch commit), each one
+    commits exactly two store versions (merge + rollup) and runs at
+    most 8 Spark jobs, and the rollup still equals a full resample."""
+    from mora_spark.operators.resample import resample
+    from mora_spark.streaming import stream_store_merge
+
+    live = tmp_path / "live"
+    live.mkdir()
+    for f in source_files:
+        shutil.copy2(f, live / os.path.basename(f))
+    store_path = str(tmp_path / "store")
+    cursor = _JobCursor(spark)
+    stats: list[dict] = []
+    store = stream_store_merge(
+        spark, str(live), str(tmp_path), store_path,
+        rollup_lengths=(300,), batch_stats=stats,
+    )
+    jobs = cursor.take()
+    assert len(stats) == len(source_files) // 2 >= 2
+    assert all(s["rows"] > 0 for s in stats)
+    assert store._log.current()[0] == 2 * len(stats)
+    assert jobs <= 8 * len(stats), f"{jobs} jobs for {len(stats)} batches"
+
+    # Nothing new to read: no batch, no commit.
+    again: list[dict] = []
+    stream_store_merge(
+        spark, str(live), str(tmp_path), store_path,
+        rollup_lengths=(300,), batch_stats=again,
+    )
+    assert again == [] and store._log.current()[0] == 2 * len(stats)
+
+    want = _candles_dict(resample(store.read(candle_length=60), 300))
+    assert _candles_dict(store.read(candle_length=300)) == want

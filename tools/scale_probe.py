@@ -222,11 +222,9 @@ def main() -> None:
                 f"  batch {s['batch_id']:>2}: rows={s['rows']:>7,} "
                 f"merge={s['merge_s']:.2f}s rollup={s['rollup_s']:.2f}s"
             )
-        # The stream ends with an empty watermark-flush batch — exclude
-        # zero-row batches so the curve compares real maintenance work.
-        walls = [
-            s["merge_s"] + s["rollup_s"] for s in stats if s["rows"]
-        ]
+        # batch_stats holds data batches only (the sink runs no
+        # watermark-only no-data batch and skips empty ones).
+        walls = [s["merge_s"] + s["rollup_s"] for s in stats]
         if len(walls) >= 6:
             # Flatness check with host-noise slack: the mean of the
             # last third must not exceed 2x the mean of the first
